@@ -1,6 +1,7 @@
 """Deterministic synthetic tokenized-console-log tables (seed=42).
 
-Generates the pipeline's primary input fixture per FIXTURES.md §1:
+Generates the pipeline's primary input fixture per FIXTURES.md §1
+(both table contracts are declared in ``schemas``):
 
   tokenized_logs(doc_id string, tokens array<int32>, n_tok int32,
                  source string)
@@ -30,6 +31,8 @@ import random
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
+
+from .schemas import ROUTE_SCHEMA, TOKENIZED_SCHEMA  # noqa: F401 (re-export)
 
 VIM_START_MARK = "\x1b[22;0;0t"
 VIM_END_MARK = "\x1b[23;0;0t"
@@ -254,22 +257,6 @@ def chapter_rows(n_sources: int = 64, seed: int = 42) -> list[dict]:
         rows.append({"source": src, "cmd_no": 3,
                      "heading": f"Deep dive ({src})"})
     return rows
-
-
-TOKENIZED_SCHEMA = pa.schema([
-    pa.field("doc_id", pa.string()),
-    pa.field("tokens", pa.list_(pa.int32())),
-    pa.field("n_tok", pa.int32()),
-    pa.field("source", pa.string()),
-])
-
-ROUTE_SCHEMA = pa.schema([
-    pa.field("source", pa.string()),
-    pa.field("route", pa.string()),
-    pa.field("sink", pa.string()),
-    pa.field("suppress_cmds", pa.list_(pa.int32())),
-    pa.field("title", pa.string()),
-])
 
 
 def build_batch(start: int, count: int, seed: int = 42,

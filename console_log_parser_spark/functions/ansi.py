@@ -121,7 +121,10 @@ _INTERM_RE = re.compile(r"[ -/]")
 
 # Severity + ISO-timestamp capture (the grok stage of the generalized
 # pipeline; analog of the reference's regex feature layer,
-# terminalparser.py:27-31).
+# terminalparser.py:27-31). These two patterns DEFINE the captures;
+# parse_doc computes the same findall results with the literal-anchored
+# scans severity_counts / timestamps below instead of running either
+# regex over the whole stripped text.
 SEVERITY_RE = re.compile(r"\b(DEBUG|INFO|WARN|ERROR)\b")
 TS_RE = re.compile(r"\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}(?:\.\d+)?")
 # error accounting (SURVEY.md §4: one bad row must not kill a 10^12-row
@@ -132,6 +135,53 @@ UNPARSED_RE = re.compile("[\x1b\ufffd]")
 
 SEVERITY_ORDER = {"DEBUG": 0, "INFO": 1, "WARN": 2, "ERROR": 3}
 SEVERITIES = ("DEBUG", "INFO", "WARN", "ERROR")
+
+
+def severity_counts(text: str) -> dict[str, int]:
+    """``Counter(SEVERITY_RE.findall(text))`` without the regex: one
+    ``str.find`` loop per severity word, keeping the occurrences whose
+    neighbours are not word characters. A ``str`` pattern's ``\\w`` is
+    exactly ``ch.isalnum() or ch == "_"``, so the check is ``\\b``'s.
+    No severity word has a border (a proper prefix that is also a
+    suffix), so whole-word occurrences never overlap and the next
+    search may start past the current one."""
+    counts: dict[str, int] = {}
+    find = text.find
+    for word in SEVERITIES:
+        n = 0
+        i = find(word)
+        while i != -1:
+            j = i + len(word)
+            # "" at either end of the text: a boundary
+            b, a = text[i - 1:i], text[j:j + 1]
+            if not (b.isalnum() or b == "_" or a.isalnum() or a == "_"):
+                n += 1
+            i = find(word, j)
+        if n:
+            counts[word] = n
+    return counts
+
+
+def timestamps(text: str) -> list[str]:
+    """``TS_RE.findall(text)`` without scanning every position: each
+    match has its first ``-`` four characters in, and its second three
+    after that, so only those ``-`` are tried, with ``TS_RE`` anchored
+    four characters back. Candidates come in increasing start order and
+    one starting inside the previous match is never tried, which is
+    findall's leftmost, non-overlapping rule."""
+    out: list[str] = []
+    match = TS_RE.match
+    find = text.find
+    p = find("-", 4)
+    while p != -1:
+        if text[p + 3:p + 4] == "-":
+            m = match(text, p - 4)
+            if m is not None:
+                out.append(m.group())
+                p = find("-", m.end() + 4)
+                continue
+        p = find("-", p + 1)
+    return out
 
 # Prompt on a *reconstructed* (post-replay) line; generalization of the
 # reference's RE_PROMPT (terminalparser.py:28).
@@ -455,11 +505,17 @@ _PARAM_DIGITS_RE = re.compile(r"\d*")
 # line but the document's last). Transcript corpora repeat prompt/command
 # lines heavily (measured 56% repeat rate at 16k synthetic docs, rising
 # with corpus size), and the function is pure, so a bounded first-come
-# cache trades ~15 MB/worker for skipping the replay walk on every
-# repeat. No eviction: the hot lines (bare prompts, common commands)
-# recur from the start, so the first 65536 distinct lines cover them;
-# on corpora with no repetition the cost is one dict probe per line.
+# cache skips the replay walk on every repeat. No eviction: the hot
+# lines (bare prompts, common commands) recur from the start, so the
+# first _MEMO_MAX_ENTRIES distinct lines cover them; on corpora with no
+# repetition the cost is one dict probe per line. A line is stored only
+# when it and its replay are at most _MEMO_MAX_LINE characters (prompt
+# lines are short; a long line is almost always unique output, and a
+# CSI @ or C can make a replay longer than its line), so the text the
+# memo holds is bounded by entries x length, whatever the input.
 _LINE_MEMO: dict[str, tuple[str, int]] = {}
+_MEMO_MAX_ENTRIES = 65536
+_MEMO_MAX_LINE = 1024
 
 
 def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
@@ -475,10 +531,19 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
     LineBuilder walk, which drops the ESC and keeps the body, matching
     the oracle's invalid-sequence branches.
     """
-    if not at_eod:
-        hit = _LINE_MEMO.get(raw_line)
-        if hit is not None:
-            return hit
+    if at_eod or len(raw_line) > _MEMO_MAX_LINE:
+        return _replay_line(raw_line, at_eod)
+    hit = _LINE_MEMO.get(raw_line)
+    if hit is None:
+        hit = _replay_line(raw_line, False)
+        if (len(_LINE_MEMO) < _MEMO_MAX_ENTRIES
+                and len(hit[0]) <= _MEMO_MAX_LINE):
+            _LINE_MEMO[raw_line] = hit
+    return hit
+
+
+def _replay_line(raw_line: str, at_eod: bool) -> tuple[str, int]:
+    """build_line_counted without the memo."""
     pat = ANSI_RE if at_eod else ANSI_COMPLETE_RE
     if _C1_ANY_RE.search(raw_line) is None:
         # One ESC-jump scan yields both the fast-path strip and the
@@ -499,10 +564,7 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
             stripped = "".join(segs)
             body = stripped[:-1] if stripped.endswith("\r") else stripped
             if _C0_RESIDUE_RE.search(body) is None:
-                r = (body, 0)
-                if not at_eod and len(_LINE_MEMO) < 65536:
-                    _LINE_MEMO[raw_line] = r
-                return r
+                return body, 0
         lb = LineBuilder()
         for j, g in enumerate(matches):
             s = segs[j]
@@ -515,19 +577,13 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
         tail = segs[len(matches)]
         if tail:
             lb.text(tail)
-        r = (lb.result(), lb.warnings)
-        if not at_eod and len(_LINE_MEMO) < 65536:
-            _LINE_MEMO[raw_line] = r
-        return r
+        return lb.result(), lb.warnings
     # C1 bytes present (rare): regex-scan path
     if _EDIT_CSI_RE.search(raw_line) is None:
         stripped = pat.sub("", raw_line)
         body = stripped[:-1] if stripped.endswith("\r") else stripped
         if _C0_RESIDUE_RE.search(body) is None:
-            r = (body, 0)
-            if not at_eod and len(_LINE_MEMO) < 65536:
-                _LINE_MEMO[raw_line] = r
-            return r
+            return body, 0
     lb = LineBuilder()
     last = 0
     for m in pat.finditer(raw_line):
@@ -541,10 +597,7 @@ def build_line_counted(raw_line: str, at_eod: bool = True) -> tuple[str, int]:
         last = m.end()
     if last < len(raw_line):
         lb.text(raw_line[last:])
-    r = (lb.result(), lb.warnings)
-    if not at_eod and len(_LINE_MEMO) < 65536:
-        _LINE_MEMO[raw_line] = r
-    return r
+    return lb.result(), lb.warnings
 
 
 def build_line(raw_line: str) -> str:
@@ -561,13 +614,13 @@ def parse_doc(text: str) -> dict:
     stripped, hist, (n_csi, n_osc, n_esc, n_dcs, n_sgr, n_c1,
                      n_app_mode, n_devstat) = classify_and_strip(text)
 
-    sev_counts = Counter(SEVERITY_RE.findall(stripped))
+    sev_counts = severity_counts(stripped)
     severity = None
     for s in ("ERROR", "WARN", "INFO", "DEBUG"):
-        if sev_counts.get(s):
+        if s in sev_counts:
             severity = s
             break
-    tss = TS_RE.findall(stripped)
+    tss = timestamps(stripped)
 
     # vim spans (line-indexed): lines between a start marker and the next
     # end marker (inclusive) are vim content -> excluded from cmd replay.

@@ -12,12 +12,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import ROUTE_DDL
+
 DEAD_LETTER_ROUTE = "route_dead_letter"
 DEAD_LETTER_SINK = "sink_dead_letter"
 
 
 def load_route_metadata(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The route dimension at ``path``, read with the declared
+    ``schemas.ROUTE_DDL`` (no schema-inference job; a file that breaks
+    the contract fails at scan)."""
+    return spark.read.schema(ROUTE_DDL).parquet(path)
 
 
 def enrich_stage(parsed: DataFrame, routes: DataFrame) -> DataFrame:

@@ -22,19 +22,10 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..functions import ansi
+from ..schemas import TOKENIZED_DDL, TOKENIZED_SCHEMA, spark_ddl
 
-PARSED_SCHEMA_DDL = (
-    "doc_id string, source string, n_tok int, "
-    "ansi_stripped string, n_stripped int, "
-    "n_events int, n_csi int, n_osc int, n_esc int, n_dcs int, "
-    "n_sgr int, n_c1 int, "
-    "seq_hist map<string,int>, "
-    "severity string, n_debug int, n_info int, n_warn int, n_error int, "
-    "ts_min string, ts_max string, "
-    "prompt_count int, cmd_lines array<string>, n_cmd int, n_vim int, "
-    "n_unparsed int, n_app_mode int, n_devstat int, n_edit_warnings int"
-)
-
+# The parsed table's contract: what parse_batch returns, and (as DDL)
+# what parse_stage declares to Spark.
 _ARROW_SCHEMA = pa.schema([
     ("doc_id", pa.string()),
     ("source", pa.string()),
@@ -70,6 +61,7 @@ _ARROW_SCHEMA = pa.schema([
     ("n_devstat", pa.int32()),
     ("n_edit_warnings", pa.int32()),
 ])
+PARSED_SCHEMA_DDL = spark_ddl(_ARROW_SCHEMA)
 
 
 def decode_token_lists(col: pa.Array) -> tuple[list[str], np.ndarray]:
@@ -266,13 +258,6 @@ def synth_tokens_stage(df: DataFrame, seed: int = 42) -> DataFrame:
     """
     from .. import datagen
 
-    out_schema = pa.schema([
-        ("doc_id", pa.string()),
-        ("tokens", pa.list_(pa.int32())),
-        ("n_tok", pa.int32()),
-        ("source", pa.string()),
-    ])
-
     def gen(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
             ids = batch.column("doc_id_num").to_pylist()
@@ -284,7 +269,6 @@ def synth_tokens_stage(df: DataFrame, seed: int = 42) -> DataFrame:
                  pa.array([len(t) for t in texts], pa.int32()),
                  pa.array([datagen.doc_source(i, seed) for i in ids],
                           pa.string())],
-                schema=out_schema)
+                schema=TOKENIZED_SCHEMA)
 
-    return df.mapInArrow(
-        gen, "doc_id string, tokens array<int>, n_tok int, source string")
+    return df.mapInArrow(gen, TOKENIZED_DDL)

@@ -28,6 +28,7 @@ from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.route import write_fanout
+from ..sources.catalog import read_tokens
 from .pipeline import PipelineConfig, build_routed
 
 
@@ -70,7 +71,7 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
     total_rows = sum(m["rows"] for m in committed.values())
     total_tokens = sum(m["tokens"] for m in committed.values())
 
-    logs = spark.read.parquet(f"{cfg.in_dir}/tokenized_logs.parquet")
+    logs = read_tokens(spark, cfg.tokens_location)
     bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
 
     for b in range(n_batches):

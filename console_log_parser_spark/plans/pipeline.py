@@ -15,9 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import aggregate as agg_ops
-from ..operators.enrich import apply_suppress_filter, enrich_stage
+from ..operators.enrich import (apply_suppress_filter, enrich_stage,
+                                load_route_metadata)
 from ..operators.parse import parse_stage
 from ..operators.route import route_stage, write_fanout
+from ..sources.catalog import read_tokens
 
 
 @dataclass
@@ -32,17 +34,19 @@ class PipelineConfig:
     # same way when the runtime jar is absent)
     tokens_table: str | None = None
 
+    @property
+    def tokens_location(self) -> str:
+        return self.tokens_table or f"{self.in_dir}/tokenized_logs.parquet"
+
 
 def build_routed(spark: SparkSession, cfg: PipelineConfig,
                  logs: DataFrame | None = None) -> DataFrame:
-    """The lazy routed-DataFrame plan (no writes)."""
-    from ..sources.catalog import read_tokens
+    """The lazy routed-DataFrame plan (no writes). Both inputs are read
+    with declared schemas, so building it launches no Spark job."""
     if logs is None:
-        logs = read_tokens(
-            spark,
-            cfg.tokens_table
-            or f"{cfg.in_dir}/tokenized_logs.parquet")
-    routes = spark.read.parquet(f"{cfg.in_dir}/route_metadata.parquet")
+        logs = read_tokens(spark, cfg.tokens_location)
+    routes = load_route_metadata(spark,
+                                 f"{cfg.in_dir}/route_metadata.parquet")
     parsed = parse_stage(logs.select("doc_id", "tokens", "n_tok", "source"))
     enriched = apply_suppress_filter(enrich_stage(parsed, routes))
     # projection only — the salted exchange is paid by write_fanout,

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import TOKENIZED_DDL
+
 
 def iceberg_available(spark: SparkSession) -> bool:
     """True when an Iceberg SparkCatalog class is loadable in this
@@ -47,10 +49,15 @@ def read_tokens(spark: SparkSession, location: str) -> DataFrame:
     4-column DataFrame contract (doc_id, tokens, n_tok, source) and
     Catalyst still gets pushdown + pruning: Iceberg via DataSourceV2
     scan planning, Parquet via the native file source.
+
+    Parquet is read with the declared ``schemas.TOKENIZED_DDL``, not an
+    inferred schema: planning the read launches no Spark job, and a file
+    whose column types differ from the contract fails when the scan
+    runs.
     """
     if "/" not in location and iceberg_available(spark):
         return spark.read.format("iceberg").load(location)
-    return spark.read.parquet(location)
+    return spark.read.schema(TOKENIZED_DDL).parquet(location)
 
 
 def write_routed(routed: DataFrame, location: str,

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-TOKENIZED_SCHEMA_DDL = (
-    "doc_id string, tokens array<int>, n_tok int, source string")
+from ..schemas import TOKENIZED_DDL
 
 EVENTS_SCHEMA_DDL = ("event_id long, ts timestamp, user_id long, "
                      "event_type string, value double, props string")
@@ -40,7 +39,7 @@ EVENTS_SCHEMA_DDL = ("event_id long, ts timestamp, user_id long, "
 def read_tokenized_stream(spark: SparkSession, in_dir: str,
                           max_files_per_trigger: int | None = None
                           ) -> DataFrame:
-    r = spark.readStream.schema(TOKENIZED_SCHEMA_DDL)
+    r = spark.readStream.schema(TOKENIZED_DDL)
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(in_dir)

@@ -1,6 +1,8 @@
 """Engine (vectorized regex, functions/ansi.py) vs oracle (char-at-a-time
 FSM, oracle.py) vs generator intent (datagen.py) — the per-doc
 correctness core."""
+from collections import Counter
+
 import pytest
 
 from console_log_parser_spark import datagen, oracle
@@ -48,12 +50,32 @@ def test_engine_matches_oracle_on_synthetic(lo, hi):
     # appends one space per step (terminal2html.py:480-488)
     "alice@box:~/w$ \x08\x08\x08~\r\n",
     "\x1b[5Galice@box:~/w$ \x1b[3C\r\n",
+    # severity words at word boundaries: \w is Unicode (letters and
+    # every numeric class) plus "_", so a non-ASCII letter or digit
+    # next to a word hides it; "-", "." and "[" do not
+    "WARNING WARN WARN_ _ERROR ERROR1 ERROR\n",
+    "INFO\u00e9 \u00e9INFO INFO\u0661 \u0661DEBUG \U0001d7d8WARN WARN\U0001d7d8\n",
+    "[INFO]-DEBUG.ERROR\x1b[0mWARN\x1b[1mERROR\n",
+    "INFOINFO DEBUGDEBUG ERRORERROR\n",
+    # timestamps: a longer digit run before the year, back-to-back
+    # matches, fractional seconds (greedy), and non-ASCII decimals
+    "12024-01-01 10:00:00 job\n",
+    "2024-01-01T00:00:002024-01-01T00:00:01.5\n",
+    "2024-01-01T00:00:00.1232024-01-02T00:00:00 x\n",
+    "t=2024-01-01 00:00:00. 2024-01-01 00:00:00.999999 2024-1-01 00:00:00\n",
+    "\u0661\u0662\u0663\u0664-01-01T00:00:00 \U0001d7d8\U0001d7d8\U0001d7d8\U0001d7d8-12-31 23:59:59\n",
+    "--2024--01-01T00:00:00-2025-01-01T00:00:00-\n",
 ])
 def test_edge_cases_engine_eq_oracle(text):
     e = ansi.parse_doc(text)
     o = oracle.oracle_parse_doc(text)
     for k in KEYS:
         assert e[k] == o[k], k
+    # parse_doc's literal-anchored scans equal the defining regexes
+    stripped = e["stripped"]
+    assert ansi.severity_counts(stripped) == dict(
+        Counter(ansi.SEVERITY_RE.findall(stripped)))
+    assert ansi.timestamps(stripped) == ansi.TS_RE.findall(stripped)
 
 
 def test_strip_removes_all_escapes():
@@ -156,6 +178,28 @@ def test_dangling_esc_dropped_from_cmd_line():
     assert e["cmd_lines"] == ["echo hitail"]
     # stripped keeps the dangling ESC (it is unparsed input, counted)
     assert e["n_unparsed"] == 1
+
+
+def test_line_memo_skips_long_lines():
+    """Worst case for the line memo: every prompt line unique and over
+    the length bound. None is stored; the replay is still exact."""
+    before = len(ansi._LINE_MEMO)
+    arg = "x" * ansi._MEMO_MAX_LINE
+    text = "".join(f"alice@box:~/w$ echo {i} {arg}\x1b[2D\x1b[K\r\n"
+                   for i in range(200))
+    e = ansi.parse_doc(text)
+    assert len(ansi._LINE_MEMO) == before
+    assert e["cmd_lines"] == oracle.oracle_parse_doc(text)["cmd_lines"]
+    assert e["cmd_lines"][7] == f"echo 7 {arg[:-2]}"
+    # a replay longer than the bound is not stored either
+    grown = "alice@box:~/w$ x\x1b[2000@y"
+    assert len(ansi.build_line_counted(grown, at_eod=False)[0]) > \
+        ansi._MEMO_MAX_LINE
+    assert grown not in ansi._LINE_MEMO
+    # short mid-document lines are still memoized
+    short = "alice@box:~/w$ echo memo-probe"
+    ansi.build_line_counted(short, at_eod=False)
+    assert short in ansi._LINE_MEMO
 
 
 def test_multiparam_edit_csi_no_valueerror():

@@ -35,6 +35,25 @@ def test_parquet_fallback_roundtrip(spark, small_dataset, tmp_path):
     assert "PartitionFilters" in plan
 
 
+def test_declared_schema_rejects_int64_n_tok(spark, small_dataset,
+                                             tmp_path):
+    """The tokenized table is read with its declared schema, not an
+    inferred one: a file whose n_tok is int64 fails when scanned."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{small_dataset}/tokenized_logs.parquet")
+    i = table.schema.get_field_index("n_tok")
+    table = table.set_column(i, "n_tok",
+                             table.column(i).cast(pa.int64()))
+    path = str(tmp_path / "tokenized_logs.parquet")
+    pq.write_table(table, path)
+    logs = catalog.read_tokens(spark, path)
+    assert logs.schema["n_tok"].dataType.simpleString() == "int"
+    with pytest.raises(Exception, match="n_tok"):
+        logs.select("n_tok").collect()
+
+
 def test_identifier_without_jar_raises(spark):
     with pytest.raises(Exception):
         catalog.read_tokens(spark, "logs.db.tokenized_logs").count()

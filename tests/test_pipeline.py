@@ -116,3 +116,25 @@ def test_broadcast_join_in_plan(spark, small_dataset):
         .executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_build_routed_launches_no_spark_jobs(spark, small_dataset):
+    """Both inputs are read with declared schemas: assembling the plan
+    infers nothing, so no Spark job runs before the caller's action."""
+    from console_log_parser_spark.plans.pipeline import build_routed
+    cfg = PipelineConfig(in_dir=small_dataset, out_dir="/tmp/unused")
+    sc = spark.sparkContext
+    group = "test_build_routed_launches_no_spark_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        routed = build_routed(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    # the group is live: the action that follows is counted under it
+    sc.setJobGroup(group, group)
+    try:
+        assert routed.count() == N_DOCS
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group)
