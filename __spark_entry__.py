@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from console_log_parser_spark.session import ship_package  # noqa: E402
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -93,17 +95,6 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
-def _ship_package(spark: SparkSession) -> None:
-    """Make the package importable on python workers regardless of cwd
-    (the spark-submit --py-files equivalent for a driver-created
-    session)."""
-    from console_log_parser_spark.session import package_zip
-    try:
-        spark.sparkContext.addPyFile(package_zip())
-    except Exception:
-        pass  # already added in this context
-
-
 # --------------------------------------------------------------------------
 # flagship
 # --------------------------------------------------------------------------
@@ -111,28 +102,10 @@ def _ship_package(spark: SparkSession) -> None:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: derive tokenized transcripts from sf0.001 documents,
     run the full pipeline plan, return per-(sink, severity) aggregates."""
-    _ship_package(spark)
-    from console_log_parser_spark import datagen
     from console_log_parser_spark.operators import aggregate as agg_ops
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    from console_log_parser_spark.operators.route import route_stage
-
     sf_dir = "/root/testdata/sf0.001"
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
-    routes = spark.createDataFrame(datagen.route_metadata_rows())
-    parsed = parse_stage(logs)
-    routed = route_stage(apply_suppress_filter(enrich_stage(parsed, routes)))
-    return agg_ops.severity_histogram(routed).orderBy("sink", "severity")
+    return (agg_ops.severity_histogram(_routed(spark, sf_dir))
+            .orderBy("sink", "severity"))
 
 
 # --------------------------------------------------------------------------
@@ -306,7 +279,7 @@ def events_asof_interleave(spark, sf_dir):
     and count the hops (side switches) — union + range-partitioned lag
     (operators/windows.py) instead of a dual-cursor merge; no
     single-partition global sort."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators.windows import (
         range_partitioned_lag)
     ev = _t(spark, sf_dir, "events")
@@ -430,7 +403,7 @@ def cast_poster_base64(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _cast_lines(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.sources import asciinema
     # ids are 8 bytes/row off a one-row-group scan; spread them so the
     # per-frame explode + format_string synthesis runs on every core
@@ -507,7 +480,7 @@ def events_hop_renumber(spark, sf_dir):
     commands at or before it. Commands = per-user time-ordered events;
     suppressed = 'error' events; hop targets = command numbers
     {3, 10, 25} of every user (broadcast dimension)."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators.enrich import (
         hop_target_renumber)
     ev = _t(spark, sf_dir, "events")
@@ -538,7 +511,7 @@ def stream_sessionize(spark, sf_dir):
     import shutil
     import tempfile
 
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix="stream_sess_")
@@ -583,7 +556,7 @@ def stream_funnel(spark, sf_dir):
     import shutil
     import tempfile
 
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix="stream_funnel_")
@@ -628,7 +601,7 @@ def stream_transitions(spark, sf_dir):
     import shutil
     import tempfile
 
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix="stream_trans_")
@@ -688,7 +661,7 @@ def stream_dedup_exact(spark, sf_dir):
     import shutil
     import tempfile
 
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix="stream_dedup_")
@@ -796,7 +769,7 @@ def doc_ngram_jaccard(spark, sf_dir):
     recall with hot shingles self-pruned out of the candidate join —
     no unbounded shingle self-join. The oracle stays the exact
     all-pairs SQL, so the hash match is the completeness proof."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return dedup.ngram_jaccard_pairs_prefix(docs)
@@ -852,7 +825,7 @@ def doc_repetition(spark, sf_dir):
 def doc_dedup_keep_first(spark, sf_dir):
     """Exact dedup with canonical survivor (min doc_id per md5(text));
     per-source surviving counts."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source",
                                                  "text")
@@ -866,7 +839,7 @@ def doc_dedup_clusters(spark, sf_dir):
     """Connected components over the MinHash near-dup pair graph:
     (doc_id, cluster-min label) per clustered doc — iterative min-label
     propagation; the DuckDB oracle recomputes it with a recursive CTE."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     pairs = dedup.minhash_dedup_pairs(docs)
@@ -890,7 +863,7 @@ def doc_minhash_dedup(spark, sf_dir):
     """MinHash(8 perms) + LSH(4 bands) candidate pairs verified by exact
     shingle Jaccard >= 1/2 (operators/dedup.py). Portable md5-based
     hashing lets DuckDB reproduce it exactly."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return dedup.minhash_dedup_pairs(docs)
@@ -898,7 +871,7 @@ def doc_minhash_dedup(spark, sf_dir):
 
 def doc_minhash_signatures(spark, sf_dir):
     """Raw MinHash signatures (first 4 components exposed as columns)."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     sigs = dedup.minhash_signatures(docs)
@@ -919,7 +892,7 @@ def doc_simhash_pairs(spark, sf_dir):
     block), which is exactly what the oracle SQL computes — the two
     agree by construction, and the hamming<=3 regime is the
     production dedup setting."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import dedup
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return dedup.simhash_pairs(docs, max_hamming=16)
@@ -959,7 +932,7 @@ def ann_lsh_top10(spark, sf_dir):
     """Scale-path ANN: random-hyperplane LSH (4 tables x 8 bits over
     integer-quantized embeddings) prunes the corpus to same-bucket
     candidates, then exact cosine re-ranks — operators/similarity.py."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
     cand = similarity.ann_lsh_candidates(emb, query_vec_id=0)
@@ -981,7 +954,7 @@ def ann_ivf_top10(spark, sf_dir):
     the collect is bounded at any corpus size), integer-exact cell
     assignment, nprobe=2 probe, exact cosine re-rank —
     operators/similarity.py."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
     cand = similarity.ann_ivf_candidates(emb, query_vec_id=0)
@@ -1001,7 +974,7 @@ def ann_matmul_top10(spark, sf_dir):
     """Exact top-k via one numpy matmul per Arrow batch with partial
     per-partition top-k (the 100-TB brute-force baseline); result is
     identical to ann_bruteforce_top10."""
-    _ship_package(spark)
+    ship_package(spark)
     import numpy as np
 
     from console_log_parser_spark.operators import similarity
@@ -1023,7 +996,7 @@ def embedding_neardup(spark, sf_dir):
     EXACT all-pairs SQL: the hash match proves the (L=32, B=4) config
     has total recall at this threshold on this corpus (also asserted
     by tests/test_similarity.py at sf0.001 and sf0.01)."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import similarity
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.neardup_lsh_pairs(emb, threshold=0.45,
@@ -1035,7 +1008,7 @@ def embedding_neardup(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 def _media(spark, sf_dir):
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import multimodal
     ids = _t(spark, sf_dir, "documents").select("doc_id")
     return multimodal.synth_media_stage(ids)
@@ -1083,14 +1056,10 @@ def media_thumbnails(spark, sf_dir):
 # against the pure-Python oracle instead)
 # --------------------------------------------------------------------------
 
-def _routed(spark, sf_dir):
-    _ship_package(spark)
-    from console_log_parser_spark import datagen
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    from console_log_parser_spark.operators.route import route_stage
+def _synth_logs(spark, sf_dir):
+    """tokenized_logs rows synthesized from the ``documents`` ids."""
+    ship_package(spark)
+    from console_log_parser_spark.operators.parse import synth_tokens_stage
     ids = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id_num"))
     # distribute the synth+parse compute: ids are 8 bytes/row, the
@@ -1098,10 +1067,14 @@ def _routed(spark, sf_dir):
     # (single row group), so without this exchange the whole synthesis
     # serializes on one core
     ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    return synth_tokens_stage(ids)
+
+
+def _routed(spark, sf_dir):
+    from console_log_parser_spark import datagen
+    from console_log_parser_spark.plans.pipeline import assemble_routed
     routes = spark.createDataFrame(datagen.route_metadata_rows())
-    parsed = parse_stage(logs)
-    return route_stage(apply_suppress_filter(enrich_stage(parsed, routes)))
+    return assemble_routed(_synth_logs(spark, sf_dir), routes)
 
 
 def html_render_stats(spark, sf_dir):
@@ -1109,18 +1082,9 @@ def html_render_stats(spark, sf_dir):
     (SGR->span fold inside one Arrow stage), aggregate per sink.
     Rows-only: the span semantics are pinned by tests/test_html_sink.py
     against the reference's convert_csi behavior."""
-    _ship_package(spark)
     from console_log_parser_spark import datagen
-    from console_log_parser_spark.operators.parse import synth_tokens_stage
     from console_log_parser_spark.sinks import html as html_sink
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    logs = _synth_logs(spark, sf_dir)
     routes = spark.createDataFrame(datagen.route_metadata_rows())
     with_sink = logs.join(
         F.broadcast(routes.select("source", "sink", "title")),
@@ -1173,18 +1137,9 @@ def pipeline_typed_events(spark, sf_dir):
     (array<struct<kind,param,final,pos>>, vtparser.py:644-694 dispatch
     stream) + the F2 device-status discard filter applied to it:
     per (kind, final) total events and events surviving the filter."""
-    _ship_package(spark)
     from console_log_parser_spark.operators.parse import (
-        device_status_discard, parse_stage, synth_tokens_stage,
-        typed_events_extractor)
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+        device_status_discard, parse_stage, typed_events_extractor)
+    logs = _synth_logs(spark, sf_dir)
     parsed = parse_stage(logs, extractors=(typed_events_extractor(),))
     total = (parsed.select(F.explode("events").alias("e"))
              .groupBy(F.col("e.kind").alias("kind"),
@@ -1204,20 +1159,11 @@ def pipeline_chapters(spark, sf_dir):
     """J1 full form: per-command chapter headings via broadcast join
     on (source, cmd_no) (terminal2html.py:399-402), suppressed
     commands numbered but heading-free."""
-    _ship_package(spark)
     from console_log_parser_spark import datagen
     from console_log_parser_spark.operators.enrich import (
         chapter_headings, enrich_stage)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    from console_log_parser_spark.operators.parse import parse_stage
+    logs = _synth_logs(spark, sf_dir)
     routes = spark.createDataFrame(datagen.route_metadata_rows())
     chapters = spark.createDataFrame(datagen.chapter_rows())
     enriched = enrich_stage(parse_stage(logs), routes)
@@ -1479,21 +1425,12 @@ def pipeline_os_commands(spark, sf_dir):
     exact count_distinct + lexicographic min/max. At 10^12 rows the
     identical plan swaps countDistinct for approx_count_distinct; the
     exact form is kept so the DuckDB oracle agrees bit-for-bit."""
-    _ship_package(spark)
     from console_log_parser_spark import datagen
     from console_log_parser_spark.operators.enrich import enrich_stage
     from console_log_parser_spark.operators.extract_sets import (
         dcs_strings_extractor, os_commands_extractor)
-    from console_log_parser_spark.operators.parse import (
-        parse_stage, synth_tokens_stage)
-    ids = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("long").alias("doc_id_num"))
-    # distribute the synth+parse compute: ids are 8 bytes/row, the
-    # downstream work ~0.4 ms/doc — the documents scan is one task
-    # (single row group), so without this exchange the whole synthesis
-    # serializes on one core
-    ids = ids.repartition(spark.sparkContext.defaultParallelism)
-    logs = synth_tokens_stage(ids)
+    from console_log_parser_spark.operators.parse import parse_stage
+    logs = _synth_logs(spark, sf_dir)
     routes = spark.createDataFrame(datagen.route_metadata_rows())
     parsed = parse_stage(logs, extractors=(
         os_commands_extractor(), dcs_strings_extractor()))
@@ -2232,7 +2169,7 @@ def stream_heavy_hitters(spark, sf_dir):
     import shutil
     import tempfile
 
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.streaming import jobs
 
     d = tempfile.mkdtemp(prefix="stream_hh_")
@@ -2537,7 +2474,7 @@ def ann_ivfpq_top10(spark, sf_dir):
     nprobe * n/K vectors' 4-byte codes instead of the corpus's raw
     floats — the IVF-PQ index structure of Jegou et al. expressed as
     two composable DataFrame operators."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators import similarity
     from console_log_parser_spark.operators.pq import ann_pq_topk
     emb = _t(spark, sf_dir, "embeddings")
@@ -2578,7 +2515,7 @@ def embedding_knn_join(spark, sf_dir):
     keys), exact-cosine rank per query (4dp round, ties -> lowest
     neighbor id). Per-query candidates are bounded by bucket sizes;
     production raises b_bits ~ log2(n) to keep them O(1)."""
-    _ship_package(spark)
+    ship_package(spark)
     from console_log_parser_spark.operators.similarity import (
         knn_join_lsh)
     return knn_join_lsh(_t(spark, sf_dir, "embeddings"), k=3)

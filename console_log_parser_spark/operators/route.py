@@ -5,7 +5,7 @@ per-file loop). At 10^12 rows the equivalent is a single shuffled
 write partitioned by sink, with the Zipf-heavy sources salted so no
 reducer owns a whole heavy hitter:
 
-  repartition(N, sink, pmod(xxhash64(doc_id), S))
+  repartition(sink, pmod(hash(doc_id), S))
 
 The salt is derived from doc_id — deterministic (BASELINE.json:14
 resume requirement: a re-run must route identically; rand() would
@@ -14,7 +14,7 @@ as the runtime backstop.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 16
@@ -29,46 +29,42 @@ ROUTED_COLUMNS = [
 ]
 
 
-def salted(df: DataFrame, num_partitions: int | None = None,
+def salt(salt_buckets: int = DEFAULT_SALT_BUCKETS) -> Column:
+    """The per-row salt, ``pmod(hash(doc_id), S)``.
+
+    Murmur3 (``F.hash``), not xxhash64: the checkpoint batch predicate
+    is ``pmod(xxhash64(doc_id), n_batches)``, and a salt from the same
+    hash would track it — inside one of 8 batches a salt mod 16 could
+    take only 2 values, so a heavy sink got 2 reducers per batch."""
+    return F.pmod(F.hash("doc_id"), F.lit(salt_buckets))
+
+
+def salted(df: DataFrame,
            salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    salt = F.pmod(F.xxhash64("doc_id"), F.lit(salt_buckets)).alias("_salt")
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("sink"), salt)
-    return df.repartition(F.col("sink"), salt)
+    return df.repartition(F.col("sink"), salt(salt_buckets).alias("_salt"))
 
 
-def route_stage(enriched: DataFrame,
-                num_partitions: int | None = None,
-                salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
-    """Project the routed columns; the salted exchange moved into
+def route_stage(enriched: DataFrame) -> DataFrame:
+    """Project the routed columns; the salted exchange lives in
     write_fanout (guide: remove shuffles outright). Routing decides
-    WHERE rows go; only the fan-out WRITE needs them physically moved.
-    An aggregate over the routed frame (the flagship severity
-    histogram) now partial-aggregates map-side straight out of the
-    parse stage instead of first paying a full-width exchange of every
-    routed row — one Exchange fewer in every aggregate-over-routed
-    plan, identical results (aggregation is partition-insensitive).
-    Callers that need the physical placement pass through salted()/
-    write_fanout, which salts exactly as before."""
-    routed = enriched.select(*ROUTED_COLUMNS)
-    if num_partitions:
-        return salted(routed, num_partitions, salt_buckets)
-    return routed
+    WHERE rows go; only the fan-out WRITE needs them physically moved,
+    so an aggregate over the routed frame (the flagship severity
+    histogram) partial-aggregates map-side straight out of the parse
+    stage instead of first paying a full-width exchange of every
+    routed row."""
+    return enriched.select(*ROUTED_COLUMNS)
 
 
-def write_fanout(routed: DataFrame, out_dir: str,
-                 mode: str = "append",
-                 num_partitions: int | None = None,
+def write_fanout(routed: DataFrame, path: str,
                  salt_buckets: int = DEFAULT_SALT_BUCKETS) -> None:
-    """One shuffled parent -> one write, hive-partitioned by sink.
+    """One salted exchange -> one write, hive-partitioned by sink.
 
-    The salted exchange lives HERE (not in route_stage): the write is
-    the only consumer that needs rows physically moved, and salting by
-    pmod(xxhash64(doc_id), S) keeps any Zipf-heavy sink from pinning a
-    whole reducer. Per-sink directories materialize under
-    ``out_dir/routed/sink=...``; a reader of one sink prunes to its
-    partition. This is the recompute-free fan-out (SURVEY.md §4:
-    per-sink write loops must not re-run the parse)."""
-    (salted(routed, num_partitions, salt_buckets)
-     .write.mode(mode).partitionBy("sink")
-     .parquet(f"{out_dir}/routed"))
+    The write is the only consumer that needs rows physically moved;
+    salting keeps any Zipf-heavy sink from pinning a whole reducer, and
+    each reducer writes one file per sink it holds, so a sink gets at
+    most ``salt_buckets`` files. Per-sink directories materialize under
+    ``path/sink=...``; a reader of one sink prunes to its partition.
+    This is the recompute-free fan-out (SURVEY.md §4: per-sink write
+    loops must not re-run the parse). The write overwrites ``path``."""
+    (salted(routed, salt_buckets)
+     .write.mode("overwrite").partitionBy("sink").parquet(path))

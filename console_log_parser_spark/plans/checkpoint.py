@@ -5,8 +5,8 @@ killed run resumes without recomputation").
 The input is carved into deterministic micro-batches by
 ``pmod(xxhash64(doc_id), n_batches)`` — a pure function of the data, so
 a resumed run reproduces the identical batch membership (rand() would
-not). Each batch writes its routed fan-out under
-``routed/batch=<i>/sink=<s>/`` and then commits a JSON manifest
+not). Each batch writes its routed fan-out through ``write_fanout``
+under ``routed/batch=<i>/sink=<s>/`` and then commits a JSON manifest
 (tmp-file + atomic rename) carrying observed row/token counts. On
 restart, committed batches are skipped; a partially-written
 uncommitted batch directory is deleted and re-run, making the whole
@@ -24,12 +24,17 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import Column, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.route import write_fanout
 from ..sources.catalog import read_tokens
 from .pipeline import PipelineConfig, build_routed
+
+
+def batch_of(n_batches: int) -> Column:
+    """The micro-batch a row belongs to: ``pmod(xxhash64(doc_id), n)``."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
 
 
 def _manifest_path(out_dir: str, batch_id: int) -> str:
@@ -60,7 +65,8 @@ def read_manifests(out_dir: str) -> dict[int, dict]:
 def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
                          n_batches: int = 8,
                          max_batches: int | None = None) -> dict:
-    """Run (or resume) the pipeline in micro-batches.
+    """Run (or resume) the pipeline in micro-batches; ``n_batches=1`` is
+    the plain one-pass run.
 
     max_batches limits how many *uncommitted* batches run this call —
     used by the kill/resume test to simulate a dead driver.
@@ -72,7 +78,7 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
     total_tokens = sum(m["tokens"] for m in committed.values())
 
     logs = read_tokens(spark, cfg.tokens_location)
-    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(n_batches))
+    bucket = batch_of(n_batches)
 
     for b in range(n_batches):
         if b in committed and committed[b].get("status") == "committed":
@@ -90,7 +96,7 @@ def run_with_checkpoints(spark: SparkSession, cfg: PipelineConfig,
         routed = routed.observe(
             obs, F.count(F.lit(1)).alias("rows"),
             F.coalesce(F.sum("n_tok"), F.lit(0)).alias("tokens"))
-        routed.write.mode("overwrite").partitionBy("sink").parquet(batch_dir)
+        write_fanout(routed, batch_dir, cfg.salt_buckets)
         metrics = dict(obs.get)
         _commit_manifest(cfg.out_dir, b, {
             "batch_id": b,

@@ -56,6 +56,27 @@ def package_zip() -> str:
     return out
 
 
+def ship_package(spark: SparkSession) -> None:
+    """Make this package importable on python workers regardless of the
+    driver's cwd (the spark-submit ``--py-files`` equivalent for a
+    driver-created session). Adds the zip once per context: a second
+    call finds it among the context's files and adds nothing."""
+    sc = spark.sparkContext
+    zip_path = package_zip()
+    name = os.path.basename(zip_path)
+    if not any(os.path.basename(f) == name for f in sc.listFiles):
+        sc.addPyFile(zip_path)
+
+
+def driver_mem_default(meminfo: str) -> str:
+    """Default driver heap for a host: min(24 g, 40 % of ``MemTotal``),
+    from the text of ``/proc/meminfo``. A fixed 24 g cannot even start
+    on a 15 GB host, since the heap is reserved and pre-touched."""
+    kib = next(int(line.split()[1]) for line in meminfo.splitlines()
+               if line.startswith("MemTotal:"))
+    return f"{min(24 * 1024, kib * 2 // 5 // 1024)}m"
+
+
 def _tune_allocator_env() -> None:
     """Pin glibc malloc behavior BEFORE the JVM (and hence the forked
     python workers) start.
@@ -80,8 +101,10 @@ def get_spark(app: str = "console_log_parser_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     _tune_allocator_env()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or \
+        len(os.sched_getaffinity(0))
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        f"local[{cpus}]"
     # local[N] pins task maxFailures to 1 (spark.task.maxFailures is
     # IGNORED in local mode; only the local[N,F] master form sets it),
     # so a single python-worker death — e.g. an OOM during a
@@ -96,6 +119,10 @@ def get_spark(app: str = "console_log_parser_spark",
         master = f"local[{m.group(1)},2]"
     sp = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE", DEFAULT_SHUFFLE_PARTITIONS))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not driver_mem:
+        with open("/proc/meminfo") as f:
+            driver_mem = driver_mem_default(f.read())
     b = (
         SparkSession.builder.master(master).appName(app)
         .config("spark.sql.shuffle.partitions", str(sp))
@@ -105,8 +132,7 @@ def get_spark(app: str = "console_log_parser_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         # Xms=Xmx + pre-touch: a fixed, pre-faulted heap. Without it
         # the heap grows/uncommits under the bursty parse allocation
         # pattern and the commit/zero churn shows up as kernel time
@@ -114,17 +140,14 @@ def get_spark(app: str = "console_log_parser_spark",
         # tuning above, JVM side). Standard long-running-executor
         # practice on real clusters.
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')} "
-                "-XX:+AlwaysPreTouch")
+                f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # ship the package to python workers (spark-submit --py-files
-        # equivalent) so jobs run regardless of the driver's cwd
-        .config("spark.submit.pyFiles", package_zip())
     )
     if extra_conf:
         for k, v in extra_conf.items():
             b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ship_package(spark)
     return spark

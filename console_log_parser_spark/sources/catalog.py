@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.route import write_fanout
 from ..schemas import TOKENIZED_DDL
 
 
@@ -67,7 +68,8 @@ def write_routed(routed: DataFrame, location: str,
     Iceberg identifier -> ``writeTo`` with hidden partitioning (the
     v2 path gives atomic commits + snapshot history, which is what
     the checkpoint manifests coordinate with at scale); Parquet path
-    -> hive-style ``partitionBy`` directories.
+    -> ``route.write_fanout``'s salted, hive-style ``sink=`` directories,
+    which only overwrite: a Parquet append has no snapshot to commit.
     """
     spark = routed.sparkSession
     if "/" not in location and iceberg_available(spark):
@@ -87,4 +89,7 @@ def write_routed(routed: DataFrame, location: str,
         else:
             writer.createOrReplace()
         return
-    routed.write.mode(mode).partitionBy("sink").parquet(location)
+    if mode != "overwrite":
+        raise ValueError(f"mode={mode!r}: the Parquet fallback only "
+                         "overwrites; appends need an Iceberg table")
+    write_fanout(routed, location)

@@ -48,16 +48,15 @@ def read_tokenized_stream(spark: SparkSession, in_dir: str,
 def stream_pipeline(spark: SparkSession, in_dir: str, out_dir: str,
                     checkpoint_dir: str, routes: DataFrame,
                     max_files_per_trigger: int | None = None):
-    """Streaming parse -> enrich -> route with exactly-once sink.
+    """Streaming parse -> enrich -> route with exactly-once sink; writes
+    the same ``ROUTED_COLUMNS`` as the batch pipeline.
 
     Returns the started StreamingQuery (AvailableNow trigger: drains
     everything currently in ``in_dir`` and stops)."""
-    from ..operators.enrich import apply_suppress_filter, enrich_stage
-    from ..operators.parse import parse_stage
+    from ..plans.pipeline import assemble_routed
 
     logs = read_tokenized_stream(spark, in_dir, max_files_per_trigger)
-    parsed = parse_stage(logs)           # same stage object as batch
-    routed = apply_suppress_filter(enrich_stage(parsed, routes))
+    routed = assemble_routed(logs, routes)  # the batch plan, streamed
     # (no salted repartition here: streaming micro-batches are already
     # bounded; the partitionBy(sink) write gives the fan-out)
     return (routed.writeStream

@@ -8,8 +8,12 @@ table, runs the micro-batch checkpointed pipeline, and prints one JSON
 line of observed metrics. Re-running after a kill resumes from the
 lineage manifests (plans/checkpoint.py).
 
+Each micro-batch's routed rows go through ``write_fanout``:
+``--salt-buckets S`` salts the exchange before the partitioned write,
+so a sink's directory in one batch holds at most S files and a
+Zipf-heavy sink spreads over up to S reducers.
+
 Usage:
-    python -m console_log_parser_spark.tools ...   # (not needed)
     spark-submit --master local[8] \
         --py-files /tmp/console_log_parser_spark.zip \
         jobs/run_pipeline.py --in-dir DATA --out-dir OUT \

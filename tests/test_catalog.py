@@ -25,6 +25,8 @@ def test_parquet_fallback_roundtrip(spark, small_dataset, tmp_path):
         "sink", F.concat(F.lit("sink_"),
                          (F.col("n_tok") % 2).cast("string")))
     out = str(tmp_path / "routed")
+    with pytest.raises(ValueError, match="overwrites"):
+        catalog.write_routed(routed, out)   # no Parquet append
     catalog.write_routed(routed, out, mode="overwrite")
     back = spark.read.parquet(out)
     assert back.count() == n

@@ -1,12 +1,16 @@
 """Kill/resume: a killed run resumes without recomputing committed
 micro-batches and converges to the same result (BASELINE.md resume
 row)."""
+import glob
 import json
 import os
+import shutil
 
+from console_log_parser_spark.operators.route import salt
 from console_log_parser_spark.plans.checkpoint import (
-    read_manifests, run_with_checkpoints)
+    batch_of, read_manifests, run_with_checkpoints)
 from console_log_parser_spark.plans.pipeline import PipelineConfig
+from console_log_parser_spark.sources.catalog import read_tokens
 
 
 def test_kill_resume_no_recompute(spark, small_dataset, tmp_path):
@@ -56,3 +60,30 @@ def test_checkpoint_totals_match_plain_run(spark, small_dataset, tmp_path):
     assert r["complete"] and r["rows"] == 300
     summ = spark.read.parquet(f"{out}/agg_sink_summary")
     assert summ.groupBy().sum("n_rows").collect()[0][0] == 300
+
+
+def test_salt_does_not_track_the_batch(spark, small_dataset):
+    """Inside one checkpoint batch the salt must still spread rows: a
+    salt from the batch's own hash would take only 2 of 16 values in
+    each of 8 batches, giving a heavy sink 2 reducers."""
+    logs = read_tokens(spark, f"{small_dataset}/tokenized_logs.parquet")
+    one_batch = logs.filter(batch_of(8) == 3)
+    assert one_batch.select(salt(16)).distinct().count() > 2
+
+
+def test_checkpoint_writes_are_salted(spark, small_dataset, tmp_path):
+    """Each batch writes through the salted fan-out: with one salt
+    bucket every sink of a batch is one reducer, hence one file, however
+    many scan tasks fed it."""
+    in_dir = tmp_path / "in"
+    (spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
+     .repartition(4).write.parquet(str(in_dir / "tokenized_logs.parquet")))
+    shutil.copy(f"{small_dataset}/route_metadata.parquet", in_dir)
+    out = str(tmp_path / "out")
+    cfg = PipelineConfig(in_dir=str(in_dir), out_dir=out, salt_buckets=1)
+    r = run_with_checkpoints(spark, cfg, n_batches=2)
+    assert r["complete"] and r["rows"] == 300
+    sink_dirs = glob.glob(f"{out}/routed/batch=*/sink=*")
+    assert len(sink_dirs) > 2
+    for d in sink_dirs:
+        assert len(glob.glob(f"{d}/*.parquet")) == 1, d

@@ -66,19 +66,23 @@ def test_duplicate_clusters_on_minhash_pairs(spark):
 
 def test_salted_router_balances_zipf_sources(spark, small_dataset):
     """The Zipf-heavy source must not own whole reducer partitions:
-    with the deterministic doc_id salt, the largest routed partition
-    stays within a small factor of the mean."""
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import parse_stage
-    from console_log_parser_spark.operators.route import route_stage
+    with the deterministic doc_id salt, the largest of the session's 8
+    shuffle partitions stays within a small factor of the mean."""
+    from console_log_parser_spark.operators.route import salted
+    from console_log_parser_spark.plans.pipeline import assemble_routed
     logs = spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
     routes = spark.read.parquet(f"{small_dataset}/route_metadata.parquet")
-    routed = route_stage(
-        apply_suppress_filter(enrich_stage(parse_stage(logs), routes)),
-        num_partitions=8)
-    sizes = (routed.groupBy(F.spark_partition_id().alias("pid"))
-             .count().collect())
+    routed = salted(assemble_routed(logs, routes))
+    # AQE would merge the small partitions of a 300-row input; measure
+    # the placement the salted hash itself produces
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        sizes = (routed.groupBy(F.spark_partition_id().alias("pid"))
+                 .count().collect())
+    finally:
+        spark.conf.set(key, prev)
     counts = [r["count"] for r in sizes]
     assert len(counts) > 1
     assert max(counts) <= 3 * (sum(counts) / len(counts)), counts

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 from console_log_parser_spark import datagen, oracle
 from console_log_parser_spark.operators.enrich import (
     DEAD_LETTER_ROUTE, DEAD_LETTER_SINK)
-from console_log_parser_spark.plans.pipeline import (
-    PipelineConfig, run_pipeline)
+from console_log_parser_spark.plans.checkpoint import run_with_checkpoints
+from console_log_parser_spark.plans.pipeline import PipelineConfig
 
 N_DOCS = 300
 
@@ -19,7 +19,7 @@ N_DOCS = 300
 def pipeline_out(spark, small_dataset, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("pipe_out"))
     cfg = PipelineConfig(in_dir=small_dataset, out_dir=out)
-    metrics = run_pipeline(spark, cfg)
+    metrics = run_with_checkpoints(spark, cfg, n_batches=1)
     return out, metrics
 
 

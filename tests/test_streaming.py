@@ -48,9 +48,8 @@ def events_split_dir(spark, tmp_path_factory):
 
 def test_stream_pipeline_matches_batch(spark, small_dataset,
                                        tmp_path_factory):
-    from console_log_parser_spark.operators.enrich import (
-        apply_suppress_filter, enrich_stage)
-    from console_log_parser_spark.operators.parse import parse_stage
+    from console_log_parser_spark.operators.route import ROUTED_COLUMNS
+    from console_log_parser_spark.plans.pipeline import assemble_routed
     from console_log_parser_spark.streaming import jobs
 
     out = str(tmp_path_factory.mktemp("stream_out"))
@@ -70,7 +69,7 @@ def test_stream_pipeline_matches_batch(spark, small_dataset,
 
     got = spark.read.parquet(f"{out}/routed")
     logs = spark.read.parquet(f"{small_dataset}/tokenized_logs.parquet")
-    want = apply_suppress_filter(enrich_stage(parse_stage(logs), routes))
+    want = assemble_routed(logs, routes)
 
     cols = ["doc_id", "sink", "severity", "n_stripped", "n_events",
             "prompt_count", "n_cmd_routed"]
@@ -78,6 +77,7 @@ def test_stream_pipeline_matches_batch(spark, small_dataset,
     w = sorted(map(tuple, want.select(*cols).collect()))
     assert g == w
     assert got.select("sink").distinct().count() >= 2  # fan-out happened
+    assert sorted(got.columns) == sorted(ROUTED_COLUMNS)
 
 
 def test_windowed_severity_emitted_windows_match_batch(
