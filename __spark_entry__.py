@@ -48,6 +48,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+# Lower bound of _spread: the round-robin exchange costs a fixed
+# ~0.1-0.15 s round trip; below a few MB of compressed input the
+# serialized compute is cheaper than that (A/B at sf0.1: doc_token_count
+# 0.42 s base vs 0.58 s spread), so small inputs stay put.
+_SPREAD_MIN_BYTES = 2 << 20
+
+
 def _spread(df: DataFrame) -> DataFrame:
     """Redistribute a LOW-PARALLELISM scan across the cluster before a
     per-row-expensive projection (regex extraction, digesting, vector
@@ -66,32 +73,20 @@ def _spread(df: DataFrame) -> DataFrame:
     table has thousands of files, the gate is false, and the plan is
     unchanged — no shuffle is ever added to a healthy scan.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df  # A/B kill-switch
     spark = df.sparkSession
-    try:
-        files = df.inputFiles()
-        cores = spark.sparkContext.defaultParallelism
-        if len(files) >= cores:
-            return df
-        from urllib.parse import unquote, urlparse
-        total = 0
-        for f in files:
-            p = unquote(urlparse(f).path) if "://" in f or \
-                f.startswith("file:") else f
-            total += os.path.getsize(p)
-        bound = int(spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                   str(128 << 20)))
-        # Lower bound: the round-robin exchange costs a fixed ~0.1-0.15s
-        # round trip; below a few MB of compressed input the serialized
-        # compute is cheaper than that (A/B at sf0.1: doc_token_count
-        # 0.42 s base vs 0.58 s spread), so small inputs stay put.
-        spread_min = int(os.environ.get("SPARK_GRAFT_SPREAD_MIN",
-                                        str(2 << 20)))
-        if spread_min <= total <= cores * bound:
-            return df.repartition(cores)
-    except Exception:
-        pass
+    files = df.inputFiles()
+    cores = spark.sparkContext.defaultParallelism
+    if len(files) >= cores:
+        return df
+    jss = spark._jsparkSession
+    hadoop_conf = jss.sessionState().newHadoopConf()
+    total = 0
+    for f in files:
+        path = spark._jvm.org.apache.hadoop.fs.Path(f)
+        total += path.getFileSystem(hadoop_conf).getFileStatus(path).getLen()
+    bound = jss.sessionState().conf().filesMaxPartitionBytes()
+    if _SPREAD_MIN_BYTES <= total <= cores * bound:
+        return df.repartition(cores)
     return df
 
 

@@ -24,6 +24,16 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _midsize_table(spark, tmp_path_factory):
+    """~3 MB of incompressible-ish data in ONE file (one row group)."""
+    from pyspark.sql import functions as F
+    p = str(tmp_path_factory.mktemp("mid") / "t.parquet")
+    (spark.range(60000)
+     .withColumn("payload", F.md5(F.col("id").cast("string")))
+     .coalesce(1).write.parquet(p))
+    return p
+
+
 def test_small_scan_unchanged(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("small") / "t.parquet")
     spark.range(100).coalesce(1).write.parquet(p)
@@ -34,12 +44,8 @@ def test_small_scan_unchanged(spark, tmp_path_factory):
 
 def test_midsize_single_file_spreads_and_preserves_rows(
         spark, tmp_path_factory):
-    p = str(tmp_path_factory.mktemp("mid") / "t.parquet")
-    # ~3 MB of incompressible-ish data in ONE file (one row group)
     from pyspark.sql import functions as F
-    (spark.range(60000)
-     .withColumn("payload", F.md5(F.col("id").cast("string")))
-     .coalesce(1).write.parquet(p))
+    p = _midsize_table(spark, tmp_path_factory)
     df = spark.read.parquet(p)
     files = [f for f in os.listdir(p) if f.endswith(".parquet")]
     assert len(files) == 1
@@ -54,12 +60,16 @@ def test_midsize_single_file_spreads_and_preserves_rows(
     assert base == spread
 
 
-def test_kill_switch(spark, monkeypatch, tmp_path_factory):
-    p = str(tmp_path_factory.mktemp("ks") / "t.parquet")
-    from pyspark.sql import functions as F
-    (spark.range(60000)
-     .withColumn("payload", F.md5(F.col("id").cast("string")))
-     .coalesce(1).write.parquet(p))
-    monkeypatch.setenv("SPARK_GRAFT_NO_SPREAD", "1")
-    out = em._spread(spark.read.parquet(p))
-    assert "RoundRobinPartitioning" not in _plan(out)
+def test_midsize_single_file_spreads_with_suffixed_max_partition_bytes(
+        spark, tmp_path_factory):
+    # "128m" is how the setting is usually written; the gate must read
+    # it through Spark's typed conf, not parse the string itself
+    p = _midsize_table(spark, tmp_path_factory)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "128m")
+    try:
+        out = em._spread(spark.read.parquet(p))
+    finally:
+        spark.conf.set(key, old)
+    assert "RoundRobinPartitioning" in _plan(out)

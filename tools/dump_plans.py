@@ -263,8 +263,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01"):
         aggs.explain("formatted")
     out.append(
         "\n## pipeline_parse_route_aggregate (bench.build_pipeline)\n\n"
-        "The EXACT DataFrame the bench times (BENCH_r*.json headline "
-        "and the scaling harness's levels): pruned parquet scan of the "
+        "The EXACT DataFrame the bench times (BENCH_r*.json "
+        "headline): pruned parquet scan of the "
         "tokenized table -> ONE MapInArrow parse stage -> broadcast "
         "route join -> suppress filter -> salted route exchange -> "
         "partial+final severity-histogram aggregation. No "
